@@ -200,6 +200,15 @@ def gen_pages_spark(spark, n_docs: int, partitions: int | None = None):
     return spark.range(0, n_docs, numPartitions=partitions).mapInPandas(batches, PAGES_DDL)
 
 
+def docs_for_sf(sf: str) -> int:
+    """Pages at scale factor ``sf``. Unknown keys raise: a default size
+    would be cached under ``pages_sf{sf}`` as if it were the real table."""
+    if sf not in SF_DOCS:
+        raise ValueError(f"unknown scale factor {sf!r}; known: "
+                         f"{', '.join(map(repr, SF_DOCS))}")
+    return SF_DOCS[sf]
+
+
 def pages_path(sf: str) -> str:
     return os.path.join(DATA_DIR, f"pages_sf{sf}")
 
@@ -215,11 +224,11 @@ PAGES_GEN = "_GEN_V3"  # bump when _gen_doc changes → stale caches regenerate
 
 def ensure_pages(sf: str, spark=None) -> str:
     """Generate (once) and return the parquet path for scale factor `sf`."""
+    n = docs_for_sf(sf)
     path = pages_path(sf)
     if os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(
             os.path.join(path, PAGES_GEN)):
         return path
-    n = SF_DOCS.get(sf, 10_000)
     os.makedirs(DATA_DIR, exist_ok=True)
     if os.path.exists(path):  # stale generation — clear so no old part
         import shutil         # files survive alongside the rewrite
@@ -416,6 +425,7 @@ def ensure_fixtures(sf: str) -> dict[str, str]:
     import pandas as pd
     import pyarrow as pa
 
+    n = docs_for_sf(sf)
     out = {}
     ub = os.path.join(DATA_DIR, f"url_buckets_sf{sf}")
     out["url_buckets"] = ub
@@ -429,7 +439,6 @@ def ensure_fixtures(sf: str) -> dict[str, str]:
             urls = ds.dataset(pages, format="parquet").to_table(
                 columns=["url"]).column("url").to_pylist()
         else:
-            n = SF_DOCS.get(sf, 10_000)
             urls = [d["url"] for d in gen_docs(range(n))]
         _write_fixture(ub, pd.DataFrame({
             "url": urls,

@@ -99,8 +99,9 @@ def compact_sinks(spark, out_dir: str,
     mix, and row content is untouched; pytest pins count + value-hash
     equality across compaction).
 
-    Handles any key=val partition tree — the run layout (sink=) and the
-    ledger layout (bucket=/sink=) alike. The per-leaf loop is
+    Handles any key=val partition tree — the salted run layout (sink=)
+    and the ledger layout (bucket=, one file per bucket by construction,
+    so a no-op there) alike. The per-leaf loop is
     driver-side but bounded by the partition count (sinks are logport's
     topics — tens; ledger buckets are the resume granularity — tens),
     and the directory listing is the local-parquet stand-in for what

@@ -12,27 +12,27 @@ configured, the functions below run with ZERO edits; here they raise with
 the stand-in documented.
 
 Mapping (parquet stand-in → Iceberg):
-  - `_write_sinks` dynamic overwrite of (bucket, sink) dirs
+  - `_write_sinks` dynamic overwrite of bucket dirs
         → `df.writeTo(tbl).overwritePartitions()` (REPLACE PARTITION —
           Iceberg's snapshot-isolated form of the same idempotent replay)
   - ledger-last commit ordering
         → still required: Iceberg commits are atomic per-table, and the
           ledger spans tables; write sinks, then commit the ledger row
-  - per-sink directory partitioning
-        → `PARTITIONED BY (bucket, sink)` in the table DDL below
+  - per-bucket directory partitioning (ledger.SINK_PARTITION_COLS)
+        → the same spec in the table DDL below
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import route as R
+from .ledger import SINK_PARTITION_COLS, sink_rows
 
 SINK_TABLE_DDL = (
     "CREATE TABLE IF NOT EXISTS {table} ("
     " url STRING, line_no INT, record STRING, record_bytes BIGINT,"
     " parse_fail BOOLEAN, bucket INT, sink STRING)"
-    " USING iceberg PARTITIONED BY (bucket, sink)"
+    f" USING iceberg PARTITIONED BY ({', '.join(SINK_PARTITION_COLS)})"
 )
 
 
@@ -57,19 +57,15 @@ def ensure_sink_table(spark: SparkSession, table: str) -> None:
     spark.sql(SINK_TABLE_DDL.format(table=table))
 
 
-def write_routed_iceberg(routed: DataFrame, table: str,
-                         salt_buckets: int = 16) -> None:
-    """The fan-out write against a real Iceberg table: salted repartition
-    (identical to route.write_routed), then overwritePartitions — a
-    replayed run REPLACES its (bucket, sink) partitions snapshot-atomically
-    instead of appending duplicates, the exact contract the parquet
-    stand-in implements with dynamic overwrite."""
+def write_routed_iceberg(routed: DataFrame, table: str) -> None:
+    """The fan-out write against a real Iceberg table: the same
+    per-bucket repartition and sink sort as ledger._write_sinks, then
+    overwritePartitions — a replayed run REPLACES its bucket partitions
+    snapshot-atomically instead of appending duplicates, the exact
+    contract the parquet stand-in implements with dynamic overwrite."""
     spark = routed.sparkSession
     if not iceberg_available(spark):
         raise NotImplementedError(
             "Iceberg runtime not on the classpath — use "
             "plans.ledger.run_with_ledger (parquet stand-in)")
-    cols = [c for c in R.ROUTED_COLS if c != "sink"] + ["bucket", "sink"]
-    salted = R.salted_repartition(routed, buckets=salt_buckets)
-    (salted.select(*[c for c in cols if c in salted.columns])  # pragma: no cover
-     .writeTo(table).overwritePartitions())
+    sink_rows(routed).writeTo(table).overwritePartitions()  # pragma: no cover

@@ -10,19 +10,23 @@ Reference semantics re-expressed (NOT ported):
   then die before offset save). We upgrade to exactly-once routed-row
   equality via the *ledger-last* protocol: (1) write sink partitions
   idempotently (dynamic partition overwrite keyed on bucket — a re-run of an
-  uncommitted bucket replaces, never appends), (2) append the ledger rows
-  only after the sink write succeeds. Crash between (1) and (2) ⇒ the bucket
-  is rewritten on resume with identical content (deterministic pipeline), so
-  the final table equals a fresh run's — the pytest gate.
+  uncommitted bucket replaces the bucket's whole directory, never appends),
+  (2) append the ledger rows only after the sink write succeeds. Crash
+  between (1) and (2) ⇒ the bucket is rewritten on resume (deterministic
+  pipeline), so the final table equals a fresh run's — the pytest gate —
+  and a route mutation in between re-routes the bucket without leaving its
+  old-sink rows behind.
 - S3 dead-letter replay (src/InotifyWatcher.cc:208-247): parse failures land
   in a quarantine table; `replay` unions them back through the same parse
   path at the start of the next run (the reference's rename-to-temp
   idempotence trick is subsumed by the sink-overwrite semantics).
 
 Scale notes: the ledger is O(n_buckets) rows per run — thousands, not
-billions; the anti-join against it is a broadcast join. Buckets double as
-the salt for the fan-out write (hash of url ⇒ hot domains spread uniformly
-across buckets), so resume granularity and skew-defusal share one shuffle.
+billions — and is built in the JVM, not from Python lists. The sink table is
+partitioned by bucket alone (SINK_PARTITION_COLS): one shuffle partition and
+one parquet file per bucket, `sink` a data column sorted within the file so
+per-sink readers skip row groups by their min/max statistics. The bucket is
+a hash of the url, so a hot domain spreads over every bucket.
 """
 
 from __future__ import annotations
@@ -80,6 +84,10 @@ def scaled_buckets(n_rows: int, max_rows_per_stream: int = MAX_ROWS_PER_STREAM,
     need = max(1, -(-int(n_rows) // max(1, int(max_rows_per_stream))))
     return max(lo, min(hi, 1 << (need - 1).bit_length()))
 
+# The sink table's partition spec: one directory, and one file, per ledger
+# bucket — the unit a resume replaces. `sink` is a data column.
+SINK_PARTITION_COLS = ("bucket",)
+
 LEDGER_SCHEMA = (
     "run_id string, bucket int, rows_routed long, bytes_shipped long, "
     "parse_failures long, status string, commit_seq long, input_fp long"
@@ -116,32 +124,10 @@ def _dir_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def _sinks_dir_exists(spark: SparkSession, out_dir: str) -> bool:
-    return _dir_exists(spark, out_dir.rstrip("/") + "/sinks")
-
-
 def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame:
     if not _dir_exists(spark, ledger_path(out_dir)):
         return spark.createDataFrame([], LEDGER_SCHEMA)
     return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path(out_dir))
-
-
-def committed_buckets(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Distinct committed bucket ids (small — broadcast into the anti-join)."""
-    return (
-        read_ledger(spark, out_dir)
-        .filter(F.col("status") == "committed")
-        .select("bucket")
-        .distinct()
-    )
-
-
-def remaining_pages(
-    spark: SparkSession, pages: DataFrame, out_dir: str, n_buckets: int = DEFAULT_BUCKETS
-) -> DataFrame:
-    """Resume scan: pages whose bucket is NOT yet committed (left anti join)."""
-    done = committed_buckets(spark, out_dir)
-    return with_bucket(pages, n_buckets).join(F.broadcast(done), "bucket", "left_anti")
 
 
 def input_fingerprints(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -168,21 +154,47 @@ def input_fingerprints(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> Da
     )
 
 
+def sink_rows(routed: DataFrame) -> DataFrame:
+    """The sink table's rows in write order: one shuffle partition per
+    bucket (so one task, and one file, per bucket), sorted by sink within
+    it. The sort also satisfies the writer's required ordering on the
+    partition column, so the write adds no sort of its own."""
+    cols = [c for c in R.ROUTED_COLS if c != "sink"] + ["bucket", "sink"]
+    return (
+        routed.select(*[c for c in cols if c in routed.columns])
+        .repartition(*SINK_PARTITION_COLS)
+        .sortWithinPartitions(*SINK_PARTITION_COLS, "sink")
+    )
+
+
 def _write_sinks(routed: DataFrame, out_dir: str) -> None:
-    """Idempotent fan-out write: dynamic overwrite of (bucket, sink) dirs.
+    """Idempotent fan-out write: dynamic overwrite of whole bucket dirs.
 
     Requires spark.sql.sources.partitionOverwriteMode=dynamic (session.py):
-    only partitions present in `routed` are replaced — committed buckets from
+    only buckets present in `routed` are replaced — committed buckets from
     earlier runs are untouched, uncommitted buckets are replaced not appended.
     """
-    cols = [c for c in R.ROUTED_COLS if c not in ("sink",)] + ["bucket", "sink"]
     (
-        routed.select(*[c for c in cols if c in routed.columns])
-        .repartition(F.col("bucket"))
+        sink_rows(routed)
         .write.mode("overwrite")
-        .partitionBy("bucket", "sink")
+        .partitionBy(*SINK_PARTITION_COLS)
         .parquet(out_dir + "/sinks")
     )
+
+
+def _refuse_old_layout(spark: SparkSession, out_dir: str) -> None:
+    """An out_dir written before the sink table was partitioned by bucket
+    alone holds `bucket=*/sink=*` directories. Writing bucket-only files
+    next to them would leave a tree partition discovery cannot read, so
+    refuse before writing anything."""
+    pat = spark._jvm.org.apache.hadoop.fs.Path(
+        out_dir.rstrip("/") + "/sinks/bucket=*/*=*")
+    fs = pat.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.globStatus(pat):
+        raise ValueError(
+            f"{out_dir}/sinks holds nested bucket=*/<col>=* partitions from an "
+            "older sink layout; the sink table is now partitioned by "
+            f"{', '.join(SINK_PARTITION_COLS)} only — use a fresh out_dir")
 
 
 def run_with_ledger(
@@ -207,65 +219,74 @@ def run_with_ledger(
     ledgers without fingerprints (NULL) skip the check. Mirrors the
     reference's one-undelivered_log-per-watched-file binding
     (/root/reference/src/LogPort.cc watch table semantics)."""
-    led = read_ledger(spark, out_dir).filter(F.col("status") == "committed")
-    stored_fp: dict[int, int | None] = {}
-    for r in led.select("bucket", "input_fp", "commit_seq").collect():
-        stored_fp[r["bucket"]] = r["input_fp"]
-    done = set(stored_fp)
-    cur_fp = {r["bucket"]: r["input_fp"]
-              for r in input_fingerprints(pages, n_buckets).collect()}
-    drifted = sorted(
-        b for b, fp in stored_fp.items()
-        if fp is not None and cur_fp.get(b, 0) != fp
-    )
-    if drifted:
-        raise ValueError(
-            f"input drift in committed buckets {drifted[:10]}"
-            f"{'...' if len(drifted) > 10 else ''}: this out_dir is bound to "
-            "a fixed input snapshot (ledger-resume contract); pages changed "
-            "inside already-committed buckets and would be silently skipped "
-            "— use a fresh out_dir for the new snapshot")
-    todo = remaining_pages(spark, pages, out_dir, n_buckets)
-    if only_buckets is not None:
-        todo = todo.filter(F.col("bucket").isin(only_buckets))
+    _refuse_old_layout(spark, out_dir)
+    # one column-pruned input pass; the drift check and the ledger rows
+    # both read the checkpoint, never the input again
+    fps = input_fingerprints(pages, n_buckets).localCheckpoint()
+    done: set[int] = set()
+    if _dir_exists(spark, ledger_path(out_dir)):  # a fresh out_dir skips this
+        stored = (read_ledger(spark, out_dir)
+                  .filter(F.col("status") == "committed")
+                  .select("bucket", "input_fp").collect())
+        done = {r["bucket"] for r in stored}
+        cur_fp = {r["bucket"]: r["input_fp"] for r in fps.collect()}
+        drifted = sorted(
+            r["bucket"] for r in stored if r["input_fp"] is not None
+            and cur_fp.get(r["bucket"], 0) != r["input_fp"]
+        )
+        if drifted:
+            raise ValueError(
+                f"input drift in committed buckets {drifted[:10]}"
+                f"{'...' if len(drifted) > 10 else ''}: this out_dir is bound to "
+                "a fixed input snapshot (ledger-resume contract); pages changed "
+                "inside already-committed buckets and would be silently skipped "
+                "— use a fresh out_dir for the new snapshot")
+    # The buckets this run is responsible for; None = all of them, and then
+    # nothing needs filtering.
+    todo = None
+    if done or only_buckets is not None:
+        todo = sorted(set(range(n_buckets) if only_buckets is None else only_buckets)
+                      - done)
+
+    def in_scope(df: DataFrame) -> DataFrame:
+        return df if todo is None else df.filter(F.col("bucket").isin(todo))
+
     # persisted watch/unwatch mutations under THIS out_dir (store.py) bind
     # to its runs — the logport watches-table contract
-    routed = parsed_routed(spark, todo.drop("bucket"), config_dir=out_dir)
-    routed = with_bucket(routed, n_buckets)
-    _write_sinks(routed, out_dir)
+    todo_pages = in_scope(with_bucket(pages, n_buckets)).drop("bucket")
+    routed = parsed_routed(spark, todo_pages, config_dir=out_dir)
+    _write_sinks(with_bucket(routed, n_buckets), out_dir)
     # Ledger rows: per-bucket aggregates computed from the JUST-WRITTEN sink
-    # partitions (a compact parquet re-scan) instead of re-evaluating the
-    # whole parse DAG a second time. Every bucket this run was responsible
-    # for gets a committed row — including buckets that routed ZERO rows —
-    # so resume converges instead of rescanning empty buckets forever.
-    universe = [b for b in range(n_buckets)
-                if b not in done and (only_buckets is None or b in only_buckets)]
-    # Only the "nothing ever written" first-run case (fully empty input, no
-    # sinks/ dir yet) may be tolerated; any other failure (corrupt files,
-    # schema drift, transient FS errors) must propagate so the run fails
-    # BEFORE committing ledger rows — otherwise every not-yet-done bucket
-    # would be committed with zeroed metrics and never re-counted on resume.
-    if _sinks_dir_exists(spark, out_dir):
-        written = (
-            spark.read.parquet(out_dir + "/sinks")
-            .filter(F.col("bucket").isin(universe))
-        )
-        stats = written.groupBy("bucket").agg(
+    # files (a two-column parquet re-scan, pruned to this run's buckets on a
+    # resume) instead of re-evaluating the parse DAG. Every bucket this run was responsible for
+    # gets a committed row — including buckets that routed ZERO rows — so
+    # resume converges instead of rescanning empty buckets forever. A failed
+    # re-scan fails the run BEFORE the ledger commit.
+    stats = (
+        in_scope(spark.read.schema("record_bytes long, parse_fail boolean, bucket int")
+                 .parquet(out_dir + "/sinks"))
+        .groupBy("bucket")
+        .agg(
             F.count(F.lit(1)).alias("rows_routed"),
             F.sum(F.col("record_bytes") + F.lit(1)).alias("bytes_shipped"),
             F.sum(F.col("parse_fail").cast("long")).alias("parse_failures"),
         )
-        stats_rows = {r["bucket"]: r for r in stats.collect()}
-    else:
-        stats_rows = {}
-    seq = int(time.time() * 1000)
-    ledger_rows = spark.createDataFrame(
-        [(run_id, b,
-          stats_rows[b]["rows_routed"] if b in stats_rows else 0,
-          stats_rows[b]["bytes_shipped"] if b in stats_rows else 0,
-          stats_rows[b]["parse_failures"] if b in stats_rows else 0,
-          "committed", seq, cur_fp.get(b, 0)) for b in universe],
-        LEDGER_SCHEMA,
+    )
+    zero = F.lit(0).cast("long")
+    ledger_rows = (
+        in_scope(spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket")))
+        # both sides hold at most one row per bucket
+        .join(F.broadcast(stats), "bucket", "left")
+        .join(F.broadcast(fps), "bucket", "left")
+        .select(
+            F.lit(run_id).alias("run_id"), "bucket",
+            F.coalesce("rows_routed", zero).alias("rows_routed"),
+            F.coalesce("bytes_shipped", zero).alias("bytes_shipped"),
+            F.coalesce("parse_failures", zero).alias("parse_failures"),
+            F.lit("committed").alias("status"),
+            F.lit(int(time.time() * 1000)).cast("long").alias("commit_seq"),
+            F.coalesce("input_fp", zero).alias("input_fp"),
+        )
     )
     ledger_rows.coalesce(1).write.mode("append").parquet(ledger_path(out_dir))
     return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path(out_dir)).filter(

@@ -7,8 +7,9 @@ parallelism, and the per-sink Kafka topics become per-sink table partitions.
 
 The DAG is shuffle-minimal by construction:
   scan(pages, html pruned) → explode+filter (narrow) → broadcast joins
-  (narrow) → envelope UDF (narrow) → ONE shuffle (the salted repartition
-  before the fan-out write) → per-sink metrics (partial agg map-side).
+  (narrow) → envelope UDF (narrow) → ONE shuffle (the per-bucket
+  repartition before the fan-out write, plans/ledger.py) → per-sink metrics
+  (partial agg map-side).
 """
 
 from __future__ import annotations
@@ -61,16 +62,3 @@ def sink_metrics(routed: DataFrame) -> DataFrame:
         F.sum(F.col("record_bytes") + F.lit(1)).alias("bytes_shipped"),
         F.sum(F.col("parse_fail").cast("long")).alias("parse_failures"),
     )
-
-
-def run_batch(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_dir: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Execute the fan-out write and return the per-sink metrics DataFrame."""
-    routed = parsed_routed(spark, pages)
-    R.write_routed(routed, out_dir, salt_buckets=salt_buckets)
-    written = spark.read.parquet(out_dir)
-    return sink_metrics(written)

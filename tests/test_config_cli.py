@@ -164,8 +164,8 @@ def test_cli_run_and_status(spark, pages_small, tmp_path, capsys, monkeypatch):
     rep = json.loads(capsys.readouterr().out)
     assert "nack" not in rep
     assert rep["ack"]["msgs"] == run_out["rows_routed"]
-    # compact: the ledger layout writes ONE file per (bucket, sink) leaf
-    # by construction, so a fresh run is already compact — the verb must
+    # compact: the ledger layout writes ONE file per bucket leaf by
+    # construction, so a fresh run is already compact — the verb must
     # be a safe no-op here (the fragmented salted-run layout is exercised
     # in test_streaming::test_compact_sinks_preserves_rows_and_bounds_files)
     assert cli.main(["compact", "--out", out_dir, "--target-mb", "1024"]) == 0

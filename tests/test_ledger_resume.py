@@ -174,3 +174,89 @@ def test_resume_raises_on_input_drift(spark, tmp_path):
         pd.DataFrame(datagen.gen_docs(range(90))), schema=datagen.PAGES_DDL)
     with pytest.raises(ValueError, match="input drift"):
         run_with_ledger(spark, grown, out, run_id="r3")
+
+
+def test_crash_after_sink_write_then_route_mutation_is_exactly_once(
+        spark, pages_small, fresh_routed, tmp_path_factory):
+    """Crash between the sink write and the ledger commit, then a `watch`
+    mutation, then resume. The resumed run re-routes every uncommitted
+    bucket to the new sink; the rows the crashed run wrote under the old
+    sink must be replaced, not kept next to the new ones. Exactly-once on
+    the row identity (url, line_no) must hold whatever the route table
+    says at resume time."""
+    from logport_spark.plans.pipeline import parsed_routed
+    from logport_spark.store import ConfigStore
+
+    out = str(tmp_path_factory.mktemp("crashmut"))
+    # the crashed run: sinks written for every bucket, ledger never committed
+    routed = L.with_bucket(parsed_routed(spark, pages_small, config_dir=out), 16)
+    L._write_sinks(routed, out)
+    assert not L.read_ledger(spark, out).count()
+
+    ConfigStore(out).watch("news", "sink_news_r5",
+                           brokers="kafka://k9:9092", product_code="prd5")
+    L.run_with_ledger(spark, pages_small, out, run_id="resume", n_buckets=16)
+
+    allr = L.read_routed(spark, out)
+    n = allr.count()
+    assert n == fresh_routed.count()
+    assert allr.select("url", "line_no").distinct().count() == n
+    # every bucket was uncommitted at the crash, so all of them re-route
+    assert allr.filter(F.col("sink") == "sink_news").count() == 0
+    assert allr.filter(F.col("sink") == "sink_news_r5").count() > 0
+
+
+def test_fresh_run_writes_one_file_per_bucket(spark, pages_small, tmp_path):
+    """The sink layout is one parquet file per ledger bucket: no `sink=`
+    directories, `sink` is a data column sorted within each file (so
+    per-sink readers can skip row groups), and `compact` has nothing to
+    do on a fresh run."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from logport_spark.operators.route import compact_sinks
+
+    out = str(tmp_path / "layout")
+    L.run_with_ledger(spark, pages_small, out, run_id="lay", n_buckets=16)
+    sinks = os.path.join(out, "sinks")
+    buckets = sorted(d for d in os.listdir(sinks) if d.startswith("bucket="))
+    lg = L.read_ledger(spark, out)
+    assert len(buckets) == lg.filter(F.col("rows_routed") > 0).count() > 1
+    for d in buckets:
+        entries = os.listdir(os.path.join(sinks, d))
+        assert not [e for e in entries if e.startswith("sink=")], d
+        files = [e for e in entries if e.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+        col = pq.read_table(os.path.join(sinks, d, files[0]),
+                            columns=["sink"]).column("sink").to_pylist()
+        assert col == sorted(col), d
+
+    routed = L.read_routed(spark, out)
+    assert "sink" in routed.columns
+    assert routed.filter(F.col("sink") == "sink_news").count() > 0
+    assert compact_sinks(spark, sinks, target_file_bytes=1 << 30) == {}
+
+
+def test_old_bucket_sink_layout_raises_before_writing(spark, pages_small, tmp_path):
+    """An out_dir whose sinks still hold the `bucket=*/sink=*` layout is
+    refused before anything is written: writing bucket-only partitions
+    next to it would break partition discovery for every later read."""
+    import os
+
+    from logport_spark.plans.pipeline import parsed_routed
+
+    out = str(tmp_path / "old")
+    routed = L.with_bucket(parsed_routed(spark, pages_small.limit(10)), 16)
+    routed.select("url", "line_no", "record", "record_bytes", "parse_fail",
+                  "bucket", "sink").write.partitionBy("bucket", "sink") \
+        .parquet(out + "/sinks")
+
+    def tree():
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(out) for f in fs)
+
+    before = tree()
+    with pytest.raises(ValueError, match="fresh out_dir"):
+        L.run_with_ledger(spark, pages_small, out, run_id="x", n_buckets=16)
+    assert tree() == before
+    assert not os.path.exists(L.ledger_path(out))

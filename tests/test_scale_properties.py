@@ -211,15 +211,34 @@ def test_iceberg_sink_gate_and_ddl_shape(spark, pages_small):
 
     from logport_spark.plans.iceberg import (
         SINK_TABLE_DDL, iceberg_available, write_routed_iceberg)
-    from logport_spark.plans.ledger import with_bucket
+    from logport_spark.plans.ledger import SINK_PARTITION_COLS, with_bucket
     from logport_spark.plans.pipeline import parsed_routed
 
     assert not iceberg_available(spark)  # this container has no runtime
     ddl = SINK_TABLE_DDL.format(table="cat.db.sinks")
-    assert "USING iceberg" in ddl and "PARTITIONED BY (bucket, sink)" in ddl
+    spec = f"PARTITIONED BY ({', '.join(SINK_PARTITION_COLS)})"
+    assert "USING iceberg" in ddl and spec in ddl
     routed = with_bucket(parsed_routed(spark, pages_small))
     with pytest.raises(NotImplementedError, match="ledger"):
         write_routed_iceberg(routed, "cat.db.sinks")
+
+
+def test_unknown_scale_factor_raises_and_caches_nothing(tmp_path, monkeypatch):
+    """A scale-factor key missing from SF_DOCS (e.g. the float 0.1 for the
+    string "0.1") raises instead of caching a default-sized table under a
+    path every later correct call would trust."""
+    import os
+
+    import pytest
+
+    monkeypatch.setattr(datagen, "DATA_DIR", str(tmp_path))
+    for bad in (0.1, "0.5"):
+        with pytest.raises(ValueError, match="scale factor"):
+            datagen.ensure_pages(bad)
+        with pytest.raises(ValueError, match="scale factor"):
+            datagen.ensure_fixtures(bad)
+    assert not [e for e in os.listdir(tmp_path)
+                if e.startswith(("pages_sf", "url_buckets_sf"))]
 
 
 def test_ensure_documents_deterministic(spark, tmp_path, monkeypatch):
